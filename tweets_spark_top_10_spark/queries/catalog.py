@@ -58,57 +58,6 @@ from tweets_spark_top_10_spark.queries.registry import ORACLE, QUERIES
 # zero fails; the r1 rows listed here are the 30 not re-checked in r2,
 # all green in r1).
 _LAST_CHECKED: dict[str, int] = {
-    # --- last driver row: round 14 ---
-    "top_revenue_orders": 14,
-    "regional_customer_revenue": 14,
-    "top_orders_per_customer": 14,
-    "embedding_quantize_int8": 14,
-    "doc_fingerprints": 14,
-    "doc_split_assignment": 14,
-    "doc_normalize": 14,
-    "sliding_event_windows": 14,
-    "hourly_event_windows": 14,
-    "event_value_udaf": 14,
-    "doc_pii_redact": 14,
-    "salted_token_count_top20": 14,
-    "stratified_sample_docs": 14,
-    "top_bigrams": 14,
-    "label_centroids_pandas": 14,
-    "user_sessions": 14,
-    "doc_quality": 14,
-    "langid_heuristic": 14,
-    "lsh_knn_invariants": 14,
-    "doc_tfidf_top3": 14,
-    "pq_codes": 14,
-    "doc_sentences_udtf": 14,
-    "pq_adc_top5": 14,
-    "ngram_jaccard_dup_pairs": 14,
-    "simhash_near_dups": 14,
-    "simhash_invariants": 14,
-    "minhash_lsh_candidates": 14,
-    "customer_balance_distribution": 14,
-    "dedup_canonical_docs": 14,
-    "ivfpq_adc_top5": 14,
-    "pq_adc_lloyd_top5": 14,
-    "dedup_components": 14,
-    "lateral_top2_orders_sql": 14,
-    "event_props_variant": 14,
-    "mergeable_user_sketches": 14,
-    "user_latest_event": 14,
-    "pq_adc_opq_top5": 14,
-    "doc_contamination": 14,
-    "doc_pack_bins": 14,
-    "part_name_fuzzy_pairs": 14,
-    "nation_trade_pagerank": 14,
-    "metrics_order_summary": 14,
-    "metrics_event_by_type": 14,
-    "media_audio_stats": 14,
-    "pq_adc_opq_rerank_top5": 14,
-    "opq_adc_rerank_top5_prebuilt": 14,
-    "dedup_keep_best_quality": 14,
-    "bpe_merge_table_batched": 14,
-    "rp_ivf_rerank_top5": 14,
-    "rp_ivf_rerank_top5_prebuilt": 14,
     # --- last driver row: round 15 ---
     "user_running_value": 15,
     "customers_without_big_orders": 15,
@@ -211,6 +160,57 @@ _LAST_CHECKED: dict[str, int] = {
     "training_pipeline_docs": 16,
     "maxsim_label_top3": 16,
     "hybrid_rrf_top5": 16,
+    # --- last driver row: round 17 ---
+    "top_revenue_orders": 17,
+    "regional_customer_revenue": 17,
+    "top_orders_per_customer": 17,
+    "embedding_quantize_int8": 17,
+    "doc_fingerprints": 17,
+    "doc_split_assignment": 17,
+    "doc_normalize": 17,
+    "sliding_event_windows": 17,
+    "hourly_event_windows": 17,
+    "event_value_udaf": 17,
+    "doc_pii_redact": 17,
+    "salted_token_count_top20": 17,
+    "stratified_sample_docs": 17,
+    "top_bigrams": 17,
+    "label_centroids_pandas": 17,
+    "user_sessions": 17,
+    "doc_quality": 17,
+    "langid_heuristic": 17,
+    "lsh_knn_invariants": 17,
+    "doc_tfidf_top3": 17,
+    "pq_codes": 17,
+    "doc_sentences_udtf": 17,
+    "pq_adc_top5": 17,
+    "ngram_jaccard_dup_pairs": 17,
+    "simhash_near_dups": 17,
+    "simhash_invariants": 17,
+    "minhash_lsh_candidates": 17,
+    "customer_balance_distribution": 17,
+    "dedup_canonical_docs": 17,
+    "ivfpq_adc_top5": 17,
+    "pq_adc_lloyd_top5": 17,
+    "dedup_components": 17,
+    "lateral_top2_orders_sql": 17,
+    "event_props_variant": 17,
+    "mergeable_user_sketches": 17,
+    "user_latest_event": 17,
+    "pq_adc_opq_top5": 17,
+    "doc_contamination": 17,
+    "doc_pack_bins": 17,
+    "part_name_fuzzy_pairs": 17,
+    "nation_trade_pagerank": 17,
+    "metrics_order_summary": 17,
+    "metrics_event_by_type": 17,
+    "media_audio_stats": 17,
+    "pq_adc_opq_rerank_top5": 17,
+    "opq_adc_rerank_top5_prebuilt": 17,
+    "dedup_keep_best_quality": 17,
+    "bpe_merge_table_batched": 17,
+    "rp_ivf_rerank_top5": 17,
+    "rp_ivf_rerank_top5_prebuilt": 17,
 }
 
 
