@@ -10,6 +10,8 @@ batch side to windows closed by the final watermark.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -317,6 +319,17 @@ def test_streaming_top_k_matches_batch(spark, sf_dir, events_dir, events_schema,
     )
     q.awaitTermination()
 
+    _assert_sink_matches_batch_top_k(
+        spark, out, load_table(spark, sf_dir, "events"), sf_dir, k=3
+    )
+
+
+def _assert_sink_matches_batch_top_k(spark, out, events, sf_dir, k):
+    """The top-K sink at ``out`` holds at most K keys per window, and
+    every window closed by the final watermark equals the batch top-K
+    over ``events``."""
+    from pyspark.sql import Window as W
+
     got = {
         (r.window_start, r.event_type): r.n
         for r in spark.read.parquet(out).collect()
@@ -325,14 +338,11 @@ def test_streaming_top_k_matches_batch(spark, sf_dir, events_dir, events_schema,
     per_window = {}
     for (ws, et), n in got.items():
         per_window.setdefault(ws, []).append((n, et))
-    assert all(len(v) <= 3 for v in per_window.values())
+    assert all(len(v) <= k for v in per_window.values())
 
     cutoff = _final_watermark_cutoff(spark, sf_dir, 600)
-    from pyspark.sql import Window as W
-
     batch = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(F.window("ts", "1 hour"), "event_type")
+        events.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("window.end") <= F.lit(cutoff))
         .select(F.col("window.start").alias("ws"), "event_type", "n")
@@ -342,11 +352,230 @@ def test_streaming_top_k_matches_batch(spark, sf_dir, events_dir, events_schema,
                 W.partitionBy("ws").orderBy(F.desc("n"), F.asc("event_type"))
             ),
         )
-        .filter(F.col("rank") <= 3)
+        .filter(F.col("rank") <= k)
     )
     expected = {(r.ws, r.event_type): r.n for r in batch.collect()}
+    assert expected, "no window closed by the final watermark"
     for key, n in expected.items():
         assert got.get(key) == n, f"{key}: stream={got.get(key)} batch={n}"
+
+
+@contextmanager
+def _session_shuffle_partitions(spark, n):
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _state_partitions(q):
+    return {
+        op["numShufflePartitions"]
+        for p in q.recentProgress
+        for op in p["stateOperators"]
+    }
+
+
+def test_stream_runs_at_core_count_and_restores_session_conf(
+    spark, events_dir, events_schema, tmp_path
+):
+    """With the batch default of 32 on the session, a started stream's
+    state runs at core count (AQE is off inside streams, so nothing
+    would coalesce 32), and the caller's session conf is untouched."""
+    from tweets_spark_top_10_spark.streaming import windowed_top_k
+    from tweets_spark_top_10_spark.streaming.sinks import foreach_batch_top_k
+
+    cores = spark.sparkContext.defaultParallelism
+    assert cores < 32
+    with _session_shuffle_partitions(spark, 32):
+        stream = file_stream(spark, events_dir, events_schema, max_files_per_trigger=1)
+        counts = windowed_top_k(stream, "ts", "event_type")
+        q = foreach_batch_top_k(
+            counts, str(tmp_path / "out"), str(tmp_path / "ckpt"), key="event_type"
+        )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+        q.awaitTermination()
+        assert _state_partitions(q) == {cores}
+
+
+def test_concurrent_starts_restore_session_conf(
+    spark, events_dir, events_schema, tmp_path
+):
+    """Starts racing from more threads than cores leave the caller's
+    conf as it was: one start's override must never be saved as
+    another's value to restore."""
+    import sys
+    import threading
+    import time
+
+    from tweets_spark_top_10_spark.streaming.sinks import start_foreach_batch
+
+    n = 4 * spark.sparkContext.defaultParallelism
+
+    def race(round_no):
+        barrier = threading.Barrier(n)
+        queries, errors = [], []
+
+        def start(i):
+            try:
+                stream = file_stream(spark, events_dir, events_schema)
+                counts = windowed_count(stream, "ts", ["event_type"])
+                barrier.wait(timeout=60)
+                # stagger so each start reads the conf while earlier
+                # starts are inside writer.start() with their override set
+                time.sleep(0.005 * i)
+                queries.append(
+                    start_foreach_batch(
+                        counts,
+                        lambda batch, _: batch.count(),
+                        str(tmp_path / f"ckpt{round_no}_{i}"),
+                    )
+                )
+            except Exception as e:  # surfaced by the assert below
+                errors.append(e)
+
+        threads = [threading.Thread(target=start, args=(i,)) for i in range(n)]
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+            assert not any(t.is_alive() for t in threads)
+            assert not errors, errors
+            assert len(queries) == n
+        finally:
+            for q in queries:
+                q.stop()
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with _session_shuffle_partitions(spark, 32):
+            for round_no in range(3):
+                race(round_no)
+                assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    finally:
+        sys.setswitchinterval(interval)
+
+
+def test_restart_keeps_checkpoint_state_partitions(
+    spark, sf_dir, events_dir, events_schema, tmp_path
+):
+    """A checkpoint started at 2 partitions keeps 2 state partitions
+    when restarted under a session that would give core count (Spark
+    pins the recorded count), and the sink still equals the batch
+    top-K across the restart."""
+    import os
+    import shutil
+
+    from tweets_spark_top_10_spark.streaming import windowed_top_k
+    from tweets_spark_top_10_spark.streaming.sinks import foreach_batch_top_k
+
+    src = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    os.makedirs(src)
+
+    def run(chunks, partitions):
+        for i in chunks:
+            shutil.copy2(f"{events_dir}/chunk{i}.parquet", src)
+        with _session_shuffle_partitions(spark, partitions):
+            stream = file_stream(spark, src, events_schema, max_files_per_trigger=1)
+            q = foreach_batch_top_k(
+                windowed_top_k(stream, "ts", "event_type"),
+                out,
+                str(tmp_path / "ckpt"),
+                key="event_type",
+                k=3,
+            )
+            q.awaitTermination()
+        return _state_partitions(q)
+
+    assert run([0, 1], 2) == {2}
+    assert run([2, 3], 32) == {2}
+    _assert_sink_matches_batch_top_k(
+        spark, out, load_table(spark, sf_dir, "events"), sf_dir, k=3
+    )
+
+
+def test_dedup_then_windowed_top_k_matches_distinct_batch(
+    spark, sf_dir, events_dir, events_schema, tmp_path
+):
+    """dedup_stream -> windowed_top_k keeps dedup's watermark instead of
+    redefining it (an analysis error), and with every event sent twice
+    the sink equals the batch top-K over distinct events."""
+    import glob
+    import os
+    import shutil
+
+    from tweets_spark_top_10_spark.streaming import windowed_top_k
+    from tweets_spark_top_10_spark.streaming.sinks import foreach_batch_top_k
+
+    src = str(tmp_path / "dup")
+    os.makedirs(src)
+    for i in range(4):
+        chunk = spark.read.schema(events_schema).parquet(f"{events_dir}/chunk{i}.parquet")
+        tmp_out = str(tmp_path / f"chunk{i}")
+        chunk.union(chunk).coalesce(1).write.parquet(tmp_out)
+        dst = f"{src}/chunk{i}.parquet"
+        shutil.copy(glob.glob(f"{tmp_out}/part-*.parquet")[0], dst)
+        os.utime(dst, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
+
+    out = str(tmp_path / "out")
+    stream = file_stream(spark, src, events_schema, max_files_per_trigger=1)
+    deduped = dedup_stream(stream, ["event_id"], "ts", watermark="10 minutes")
+    counts = windowed_top_k(deduped, "ts", "event_type", watermark="1 hour")
+    q = foreach_batch_top_k(counts, out, str(tmp_path / "ckpt"), key="event_type", k=3)
+    q.awaitTermination()
+
+    distinct = load_table(spark, sf_dir, "events").dropDuplicates(["event_id"])
+    _assert_sink_matches_batch_top_k(spark, out, distinct, sf_dir, k=3)
+
+
+def test_foreach_batch_top_k_processing_time_trigger(
+    spark, sf_dir, events_dir, events_schema, tmp_path
+):
+    """A processing-time trigger gives a long-running query: it drains
+    the input, stays active for more, and its sink equals the batch
+    top-K."""
+    from tweets_spark_top_10_spark.streaming import windowed_top_k
+    from tweets_spark_top_10_spark.streaming.sinks import foreach_batch_top_k
+
+    out = str(tmp_path / "out")
+    stream = file_stream(spark, events_dir, events_schema, max_files_per_trigger=1)
+    q = foreach_batch_top_k(
+        windowed_top_k(stream, "ts", "event_type"),
+        out,
+        str(tmp_path / "ckpt"),
+        key="event_type",
+        k=3,
+        trigger={"processingTime": "1 second"},
+    )
+    try:
+        q.processAllAvailable()
+        assert q.isActive
+    finally:
+        q.stop()
+    _assert_sink_matches_batch_top_k(
+        spark, out, load_table(spark, sf_dir, "events"), sf_dir, k=3
+    )
+
+
+def test_write_stream_only_in_sinks():
+    """Every stream starts through streaming/sinks.py, so the stream
+    partition policy there covers all of them."""
+    import pathlib
+
+    import tweets_spark_top_10_spark
+
+    root = pathlib.Path(tweets_spark_top_10_spark.__file__).parent
+    users = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if "writeStream" in p.read_text()
+    )
+    assert users == ["streaming/sinks.py"], users
 
 
 def test_session_window_matches_batch(spark, sf_dir, events_dir, events_schema):

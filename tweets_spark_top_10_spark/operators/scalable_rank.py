@@ -270,7 +270,6 @@ def grouped_exact_quantiles_multi(
     df: DataFrame,
     group_cols: list[str],
     specs: list[tuple[str, list[tuple[float, str]]]],
-    persist_intermediate: bool = True,
 ) -> DataFrame:
     """Per-group exact quantiles over SEVERAL measure columns in ONE
     corpus pass — ``specs`` is ``[(value_col, [(q, out_name), ...]),
@@ -289,6 +288,15 @@ def grouped_exact_quantiles_multi(
     ~builtin-parity fused; the builtin itself is 1.5 s).  All quantiles
     are probed for every tag (wasted probes are metadata) and the final
     pivot keeps only the requested (tag, q) pairs.
+
+    The range-partitioned, id-stamped intermediate is always persisted.
+    ``repartitionByRange`` samples its bounds and
+    ``monotonically_increasing_id`` numbers rows by physical position,
+    so neither is deterministic across recomputations: without the
+    persist, the extents aggregate and the final rank probe could each
+    recompute it under a DIFFERENT range-partition layout and rank
+    against mismatched partition offsets — a silently wrong quantile,
+    not an error.
     """
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     pre = df.select(
@@ -312,7 +320,7 @@ def grouped_exact_quantiles_multi(
     base_cols = list(group_cols)
     group_cols = [*group_cols, "__tag"]
     value_col = "__val"
-    tagged = (
+    tagged = persist_tracked(
         pre.repartitionByRange(parallelism, *group_cols, value_col)
         .sortWithinPartitions(*group_cols, value_col)
         .select(
@@ -321,8 +329,6 @@ def grouped_exact_quantiles_multi(
             F.monotonically_increasing_id().alias("__mid"),
         )
     )
-    if persist_intermediate:
-        tagged = persist_tracked(tagged)
     # per-(partition, group) extents: one row per (pid, group) —
     # metadata-sized (#partitions x #groups).  Consecutive-mid contract
     # enforced per (pid, group): rows of a group are contiguous within a

@@ -65,9 +65,13 @@ in-write refresh below covers readers sharing the stream's session).
 
 from __future__ import annotations
 
+from collections.abc import Mapping
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from tweets_spark_top_10_spark.streaming.sinks import AVAILABLE_NOW, start_foreach_batch
 
 _BATCH_COL = "__ingest_batch"
 
@@ -124,14 +128,15 @@ def foreach_batch_bucketed_ingest(
     bucket_key: str,
     n_buckets: int,
     checkpoint: str,
-    trigger_available_now: bool = True,
+    trigger: Mapping[str, object] = AVAILABLE_NOW,
 ) -> StreamingQuery:
-    """writeStream.foreachBatch → batch-id-partitioned, bucketed ingest.
+    """foreachBatch → batch-id-partitioned, bucketed ingest.
 
     ``repartition(n_buckets, bucket_key)`` before every write keeps the
     one-file-per-bucket-PER-PARTITION contract (each task holds exactly
     one bucket), bounding file count at buckets x batches until
-    compaction folds the history.
+    compaction folds the history.  ``trigger`` as in
+    :func:`~tweets_spark_top_10_spark.streaming.sinks.start_foreach_batch`.
     """
 
     def _write(batch: DataFrame, batch_id: int) -> None:
@@ -184,12 +189,7 @@ def foreach_batch_bucketed_ingest(
         # table never chase deleted files
         spark.sql(f"REFRESH TABLE {table_name}")
 
-    writer = stream.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, _write, checkpoint, trigger=trigger)
 
 
 def _rescue_late_partitions(aside: str, path: str, horizon: int) -> None:

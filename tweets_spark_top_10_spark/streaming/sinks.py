@@ -6,14 +6,74 @@ rows for a window, then (commented-out) insert the batch rows): each
 micro-batch dynamically overwrites exactly the result partitions it
 contains. Re-running a batch rewrites the same partitions — idempotent,
 no delete window arithmetic, no month off-by-one bug (SURVEY.md §1.2).
+
+Every streaming query the engine starts goes through this module
+(:func:`start_foreach_batch`, :func:`run_to_memory`), so every stream
+runs its shuffles and state at core count — see :func:`_start`.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import threading
+from collections.abc import Callable, Mapping
+from types import MappingProxyType
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+AVAILABLE_NOW: Mapping[str, object] = MappingProxyType({"availableNow": True})
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_START_LOCK = threading.Lock()
+
+
+def _start(stream: DataFrame, writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer`` with ``spark.sql.shuffle.partitions`` at
+    min(session value, cores), then restore the caller's value.
+
+    Spark turns AQE off inside streaming queries, so nothing coalesces
+    the batch default (32) and every micro-batch pays one task per
+    partition per exchange plus one state-store commit per state
+    partition — with no input, a batch cost as much as one with input.
+    ``DataStreamWriter.start`` clones the session conf synchronously
+    (StreamExecution's ``sparkSessionForStream``), so the value is only
+    needed for the duration of the call; the lock keeps two concurrent
+    starts from restoring each other's override.  It applies on every
+    start: a restarted query keeps the state partition count its
+    checkpoint recorded (Spark pins it for the checkpoint's life), but
+    its foreachBatch exchanges follow the start-time conf.
+    """
+    spark = stream.sparkSession
+    with _START_LOCK:
+        prev = spark.conf.get(_SHUFFLE_PARTITIONS)
+        cores = spark.sparkContext.defaultParallelism
+        spark.conf.set(_SHUFFLE_PARTITIONS, str(min(int(prev), cores)))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(_SHUFFLE_PARTITIONS, prev)
+
+
+def start_foreach_batch(
+    stream: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint: str,
+    trigger: Mapping[str, object] = AVAILABLE_NOW,
+) -> StreamingQuery:
+    """Start ``stream`` with ``fn(batch, batch_id)`` as its foreachBatch
+    sink — the one start path of every foreachBatch query.
+
+    ``trigger`` is passed to ``DataStreamWriter.trigger`` as keywords:
+    the default drains what is there and stops; a long-running query
+    passes e.g. ``{"processingTime": "30 seconds"}`` (Spark's own
+    default is ``{"processingTime": "0 seconds"}``).
+    """
+    writer = (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(**trigger)
+    )
+    return _start(stream, writer)
 
 
 def foreach_batch_overwrite(
@@ -22,12 +82,13 @@ def foreach_batch_overwrite(
     partition_by: list[str],
     checkpoint: str,
     transform: Callable[[DataFrame], DataFrame] | None = None,
-    trigger_available_now: bool = True,
+    trigger: Mapping[str, object] = AVAILABLE_NOW,
 ) -> StreamingQuery:
-    """writeStream.foreachBatch → dynamic partition overwrite of parquet.
+    """foreachBatch → dynamic partition overwrite of parquet.
 
     ``transform`` runs per micro-batch on the driver-side plan (e.g. the
     per-window top-K ranking that can't run inside the stream).
+    ``trigger`` as in :func:`start_foreach_batch`.
     """
 
     def _write(batch: DataFrame, batch_id: int) -> None:
@@ -39,12 +100,7 @@ def foreach_batch_overwrite(
             .parquet(path)
         )
 
-    writer = stream.writeStream.foreachBatch(_write).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, _write, checkpoint, trigger=trigger)
 
 
 def foreach_batch_top_k(
@@ -54,6 +110,7 @@ def foreach_batch_top_k(
     key: str,
     k: int = 10,
     count_col: str = "n",
+    trigger: Mapping[str, object] = AVAILABLE_NOW,
 ) -> StreamingQuery:
     """The streaming reference query's sink: per finalized window, keep
     the top-K keys by count and overwrite that window's result partition.
@@ -62,7 +119,8 @@ def foreach_batch_top_k(
     exactly once, after the watermark closes it), so state stays the
     incremental windowed count — Spark needs no sorted/update-mode
     output support.  This is `App.java:99+134`'s orderBy+limit applied
-    per hour-window, continuously.
+    per hour-window, continuously.  ``trigger`` as in
+    :func:`start_foreach_batch`.
     """
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
@@ -83,6 +141,7 @@ def foreach_batch_top_k(
         partition_by=["window_start"],
         checkpoint=checkpoint,
         transform=rank,
+        trigger=trigger,
     )
 
 
@@ -94,13 +153,13 @@ def run_to_memory(
     """Drain a (bounded) stream into an in-memory table and return the
     query; callers awaitTermination then read ``spark.table(name)``.
     Test-only: memory sink collects to the driver."""
-    return (
+    writer = (
         stream.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(**AVAILABLE_NOW)
     )
+    return _start(stream, writer)
 
 
 def foreach_batch_kv_upsert(
@@ -110,7 +169,7 @@ def foreach_batch_kv_upsert(
     checkpoint: str,
     n_buckets: int = 16,
     seq_col: str | None = None,
-    trigger_available_now: bool = True,
+    trigger: Mapping[str, object] = AVAILABLE_NOW,
 ) -> StreamingQuery:
     """Keyed bulk-upsert sink — the live analog of the reference's
     commented-out ES bulk index (``saveNewResults``,
@@ -130,7 +189,7 @@ def foreach_batch_kv_upsert(
     wins — deterministic, but within-trigger order is undefined (the
     streaming/ann dedup contract).  Across batches the upsert gives
     last-writer-wins, and replaying a batch converges to the same
-    table.
+    table.  ``trigger`` as in :func:`start_foreach_batch`.
     """
     from pyspark.sql import functions as F
 
@@ -152,9 +211,4 @@ def foreach_batch_kv_upsert(
         )
         upsert_rows_by_bucket(batch.sparkSession, keyed, table_path, key_col)
 
-    writer = stream.writeStream.foreachBatch(_merge).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, _merge, checkpoint, trigger=trigger)

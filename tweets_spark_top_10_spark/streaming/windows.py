@@ -18,6 +18,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def _with_watermark(stream: DataFrame, ts_col: str, watermark: str) -> DataFrame:
+    """``withWatermark`` unless ``ts_col`` already carries one (Spark
+    marks a watermarked column with ``spark.watermarkDelayMs`` field
+    metadata) — redefining it is an analysis error, so a stream that
+    went through e.g. :func:`~tweets_spark_top_10_spark.streaming.dedup.
+    dedup_stream` keeps its upstream watermark."""
+    if "spark.watermarkDelayMs" in stream.schema[ts_col].metadata:
+        return stream
+    return stream.withWatermark(ts_col, watermark)
+
+
 def windowed_count(
     stream: DataFrame,
     ts_col: str,
@@ -28,11 +39,15 @@ def windowed_count(
 ) -> DataFrame:
     """Count per (event-time window, *keys) with a watermark.
 
+    If ``ts_col`` already has a watermark (e.g. the stream came through
+    ``dedup_stream``), that watermark is kept and ``watermark`` is
+    ignored; Spark disallows redefining it.
+
     Output columns: window_start, window_end, *keys, n.
     """
     win = F.window(ts_col, window, slide) if slide else F.window(ts_col, window)
     return (
-        stream.withWatermark(ts_col, watermark)
+        _with_watermark(stream, ts_col, watermark)
         .groupBy(win, *keys)
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
@@ -61,6 +76,8 @@ def windowed_top_k(
     top_k_per_group` — ranking inside the stream would need update-mode
     sorting Spark doesn't support. This returns the windowed counts;
     the K is applied by the caller's sink (see sinks.foreach_batch_top_k).
+    An existing watermark on ``ts_col`` is kept, as in
+    :func:`windowed_count`.
     """
     return windowed_count(stream, ts_col, [key], window=window, watermark=watermark)
 
